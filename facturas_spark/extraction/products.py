@@ -77,9 +77,14 @@ def normalize_product_name(name: str | None) -> str:
 
 
 # --- P4: quantity ------------------------------------------------------------
+# A pattern that opens on a digit run starts only at the run's first digit,
+# (?<!\d), and takes each run possessively. Neither changes what search()
+# returns: a later start in the same run matches only if the first one does,
+# and every token after a run rejects a digit. Both keep a line of n digits
+# at O(n) instead of O(n^2).
 _QTY_PATTERNS = [
-    re.compile(r"(\d+[,\.]\d+)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)", _I),
-    re.compile(r"(\d+)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)", _I),
+    re.compile(r"(?<!\d)(\d++[,\.]\d++)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)", _I),
+    re.compile(r"(?<!\d)(\d++)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)", _I),
     re.compile(r"^(\d+[,\.]\d+)"),
     re.compile(r"^(\d+)"),
 ]
@@ -99,12 +104,12 @@ def extract_quantity(text: str | None) -> float:
 
 # --- P5: price ---------------------------------------------------------------
 _PRICE_PATTERNS = [
-    re.compile(r"(\d+[,\.]\d{2})\s*€"),
+    re.compile(r"(?<!\d)(\d++[,\.]\d{2})\s*€"),
     re.compile(r"€\s*(\d+[,\.]\d{2})"),
-    re.compile(r"(\d+[,\.]\d{2})\s*euros?", _I),
-    re.compile(r"(\d+[,\.]\d{2})\s*eur", _I),
-    re.compile(r"(\d+[,\.]\d{2})$"),
-    re.compile(r"(\d+)\s*€"),
+    re.compile(r"(?<!\d)(\d++[,\.]\d{2})\s*euros?", _I),
+    re.compile(r"(?<!\d)(\d++[,\.]\d{2})\s*eur", _I),
+    re.compile(r"(?<!\d)(\d++[,\.]\d{2})$"),
+    re.compile(r"(?<!\d)(\d++)\s*€"),
     re.compile(r"€\s*(\d+)"),
 ]
 
@@ -292,10 +297,10 @@ _KB: list[tuple[tuple[str, ...], float | None, float | None, str]] = [
 ]
 
 _UNIT_COUNT_PATTERNS = [
-    (re.compile(r"(\d+)\s*(?:uds?|unidades?)", _I), None, "unidad"),
-    (re.compile(r"(\d+)\s*(?:pcs?|piezas?)", _I), None, "unidad"),
-    (re.compile(r"(\d+)\s*(?:cajas?)", _I), None, "caja"),
-    (re.compile(r"(\d+)\s*(?:packs?)", _I), None, "pack"),
+    (re.compile(r"(?<!\d)(\d++)\s*(?:uds?|unidades?)", _I), None, "unidad"),
+    (re.compile(r"(?<!\d)(\d++)\s*(?:pcs?|piezas?)", _I), None, "unidad"),
+    (re.compile(r"(?<!\d)(\d++)\s*(?:cajas?)", _I), None, "caja"),
+    (re.compile(r"(?<!\d)(\d++)\s*(?:packs?)", _I), None, "pack"),
     (re.compile(r"docena", _I), 12, "unidad"),
     (re.compile(r"media\s+docena", _I), 6, "unidad"),
 ]
@@ -335,7 +340,8 @@ def infer_format(desc: str) -> tuple[str | None, float | None, float | None]:
 
 
 # --- P10: explicit commercial format -------------------------------------------
-_NUM = r"(\d+(?:[,\.]\d+)?)"
+# linear digit-run form, see P4 (the lookbehind always holds after a keyword)
+_NUM = r"(?<!\d)(\d++(?:[,\.]\d++)?)"
 _PESO_PATTERNS = [
     re.compile(_NUM + r"\s*kg", _I),
     re.compile(_NUM + r"\s*kilogramos?", _I),
@@ -498,8 +504,13 @@ def infer_category(description: str | None) -> str:
 
 # --- P3: full-text product extraction (the line-level driver) --------------------
 _MEAT_KW = re.compile(r"carne|meat|ternera|cerdo|pollo|beef|pork|chicken", _I)
-_QTY_SHAPE = re.compile(r"\d+[,\.]?\d*\s*(kg|g|gramos?|kilogramos?|unidades?|uds?|piezas?)", _I)
-_PRICE_SHAPE = re.compile(r"\d+[,\.]\d{2}\s*€|€\s*\d+[,\.]\d{2}", _I)
+# Linear digit-run forms, see P4. The backtracking form of _QTY_SHAPE,
+# \d+[,\.]?\d*, tries O(n^2) splits of an n-digit run at each of its n
+# start offsets; only match/no-match is used, and both forms agree on it.
+_QTY_SHAPE = re.compile(
+    r"(?<!\d)\d++(?:[,\.]\d*+)?\s*(kg|g|gramos?|kilogramos?|unidades?|uds?|piezas?)", _I
+)
+_PRICE_SHAPE = re.compile(r"(?<!\d)\d++[,\.]\d{2}\s*€|€\s*\d+[,\.]\d{2}", _I)
 _HAS_DIGIT = re.compile(r"\d")
 _HAS_WORD = re.compile(r"[a-záéíóúñ]{3,}", _I)
 

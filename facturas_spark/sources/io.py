@@ -5,11 +5,14 @@
   ``whatsapp_`` name prefix are always jpeg; default pdf).
 - :func:`write_bucketed`     — S5 row sink: parquet partitioned by
   ``bucket = xxhash64(url) % N`` (emulates Iceberg ``bucket(N, url)``;
-  full-url hashing breaks host skew at the storage layer).
+  full-url hashing breaks host skew at the storage layer). Rows are
+  clustered by bucket first: one file per bucket, not per (task, bucket).
 - :class:`LineageManifest` / :func:`run_with_resume` — S6 processing-state
   machine re-expressed at partition granularity: a JSON ledger of committed
   buckets (rows + metric digest each); re-runs skip committed buckets and
   are idempotent. This is the north rule's checkpointed-lineage resume.
+  It persists header fields only, so it runs the header-only kernel: no
+  line items computed in Python and shipped through Arrow to be dropped.
 
 At 10^12 docs the manifest is per (bucket, snapshot) — tiny relative to
 data — and the write path is overwrite-by-partition, so a mid-job failure
@@ -24,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from facturas_spark.pipeline import extract_pages_full, with_salt_bucket
+from facturas_spark.pipeline import extract_pages, with_salt_bucket
 
 __all__ = ["mime_from_url", "write_bucketed", "LineageManifest", "run_with_resume"]
 
@@ -44,8 +47,11 @@ def mime_from_url(url: Column) -> Column:
 
 def write_bucketed(df: DataFrame, path: str, n_buckets: int = 16) -> None:
     """S5: write partitioned by url-hash bucket (dynamic overwrite so a
-    re-run replaces exactly the buckets it processed — idempotent)."""
-    out = with_salt_bucket(df, n_buckets=n_buckets)
+    re-run replaces exactly the buckets it processed — idempotent).
+    Rebalancing on bucket sends each bucket to one writer task, so the
+    per-file open/close/commit cost is paid per bucket, not per (input
+    task, bucket); unlike repartition, AQE can still split a huge bucket."""
+    out = with_salt_bucket(df, n_buckets=n_buckets).hint("rebalance", "bucket")
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -95,41 +101,33 @@ def run_with_resume(
     """Extraction with per-bucket checkpointed resume (S6 semantics).
 
     Plan: bucket the input by url hash; skip buckets already in the
-    manifest; run the fused extraction on the remaining buckets in ONE job
-    (single scan + single write, not a per-bucket loop); commit each
-    processed bucket's manifest entry after the write succeeds.
+    manifest; extract the header fields of the remaining buckets and write
+    them in ONE pass (single scan, one shuffle that clusters rows by bucket,
+    single write; not a per-bucket loop); commit each processed bucket's
+    manifest entry after the write succeeds.
 
     Returns {"processed": [...], "skipped": [...], "rows": n}.
     """
     manifest = LineageManifest(os.path.join(out_dir, "_manifest"))
     done = set(manifest.committed())
+    path = os.path.join(out_dir, "extracted")
 
-    bucketed = with_salt_bucket(pages, n_buckets=n_buckets)
-    todo = bucketed.filter(~F.col("bucket").isin(*done) if done else F.lit(True))
-
-    # bucket is a pure function of url — recompute after extraction instead
-    # of joining back (keeps the job a single scan with zero shuffles before
-    # the partitioned write)
-    extracted = with_salt_bucket(
-        extract_pages_full(todo.select("url", "warc_ts", "html", "text", "lang")),
-        n_buckets=n_buckets,
+    todo = with_salt_bucket(pages, n_buckets=n_buckets)
+    if done:
+        todo = todo.filter(~F.col("bucket").isin(*done))
+    # bucket is a pure function of url: write_bucketed recomputes it after
+    # extraction instead of carrying it through the UDF
+    extracted = extract_pages(todo.select("url", "warc_ts", "html", "text", "lang")).drop(
+        "requiere_revision"
     )
+    write_bucketed(extracted, path, n_buckets=n_buckets)
 
-    # one write for all pending buckets (dynamic partition overwrite keeps
-    # committed buckets' data intact and re-runs idempotent)
-    (
-        extracted.drop("productos")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, "extracted"))
-    )
-
-    # per-bucket stats from what we just wrote -> manifest commits.
-    # Scan ONLY this run's buckets (partition-pruned read): digesting the
-    # long-committed buckets too would make resume cost grow with total
+    # per-bucket stats from what we just wrote -> manifest commits. The
+    # schema is known from the plan, so no parquet footer is read to infer
+    # it. Scan ONLY this run's buckets (partition-pruned read): digesting
+    # the long-committed buckets too would make resume cost grow with total
     # corpus size instead of with the pending work.
-    stats_src = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    stats_src = spark.read.schema(with_salt_bucket(extracted, n_buckets).schema).parquet(path)
     if done:
         stats_src = stats_src.filter(~F.col("bucket").isin(*done))
     stats = (
@@ -145,14 +143,10 @@ def run_with_resume(
         )
         .collect()
     )
-    processed = []
     for r in stats:
-        if r.bucket in done:
-            continue
         manifest.commit(int(r.bucket), int(r.rows), r.digest)
-        processed.append(int(r.bucket))
     return {
-        "processed": sorted(processed),
+        "processed": sorted(int(r.bucket) for r in stats),
         "skipped": sorted(done),
-        "rows": sum(int(r.rows) for r in stats if r.bucket not in done),
+        "rows": sum(int(r.rows) for r in stats),
     }

@@ -94,6 +94,67 @@ def test_run_with_resume_partial(spark, tmp_path):
     ) <= {1, 3}
 
 
+
+def _bucket_files(out: str) -> dict[int, list[str]]:
+    root = os.path.join(out, "extracted")
+    return {
+        int(d.split("=", 1)[1]): sorted(
+            f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet")
+        )
+        for d in os.listdir(root)
+        if d.startswith("bucket=")
+    }
+
+
+def test_run_with_resume_writes_header_rows_one_file_per_bucket(spark, tmp_path):
+    from facturas_spark.pipeline import extract_pages
+
+    # several input tasks, so an unclustered write would put one file per
+    # (task, bucket) into each bucket
+    df = spark.createDataFrame(corpus_rows(80, seed=7), PAGES_SCHEMA_DDL).repartition(4)
+    out = str(tmp_path / "job")
+    run_with_resume(spark, df, out, n_buckets=4)
+
+    files = _bucket_files(out)
+    assert sorted(files) == [0, 1, 2, 3]
+    assert all(len(fs) == 1 for fs in files.values()), files
+
+    back = spark.read.parquet(os.path.join(out, "extracted")).drop("bucket")
+    ref = extract_pages(df).drop("requiere_revision")
+    assert back.columns == ref.columns
+    got = {r.url: r for r in back.collect()}
+    exp = {r.url: r for r in ref.collect()}
+    assert got.keys() == exp.keys() and len(got) == 80
+    for url, row in exp.items():
+        assert got[url] == row, url
+
+
+def test_run_with_resume_rewrites_only_deleted_buckets(spark, tmp_path):
+    df = spark.createDataFrame(corpus_rows(80, seed=7), PAGES_SCHEMA_DDL).repartition(4)
+    out = str(tmp_path / "job")
+    mdir = os.path.join(out, "_manifest")
+    run_with_resume(spark, df, out, n_buckets=4)
+    m1 = LineageManifest(mdir).committed()
+    files1 = _bucket_files(out)
+
+    deleted = {1, 3}
+    for b in deleted:
+        for name in (f"bucket={b}.json", f".bucket={b}.json.crc"):
+            if os.path.exists(os.path.join(mdir, name)):
+                os.remove(os.path.join(mdir, name))
+    r = run_with_resume(spark, df, out, n_buckets=4)
+    assert set(r["processed"]) == deleted
+    assert set(r["skipped"]) == {0, 2}
+    assert r["rows"] == sum(m1[b]["rows"] for b in deleted)
+    assert LineageManifest(mdir).committed() == m1  # same rows and digests
+
+    files2 = _bucket_files(out)
+    assert all(len(fs) == 1 for fs in files2.values()), files2
+    for b in files1:
+        # a rewritten bucket gets a new file; a skipped one keeps its own
+        assert (files2[b] != files1[b]) == (b in deleted), b
+
+
 def test_stream_extract_incremental(spark, tmp_path):
     from facturas_spark.streaming.stream import stream_extract_pages
 

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import random
+import re
+import time
+
 import pytest
 
 from facturas_spark.extraction.boilerplate import extract_main_text
@@ -360,3 +364,94 @@ def test_p4_p7_columnar_match_kernels(spark):
         assert r["precio"] == extract_price(line), line
         assert r["codigo"] == extract_code(line), line
         assert r["unidad"] == extract_unit(line), line
+
+
+# The backtracking originals of the linear digit-run patterns, in the order
+# of _digit_run_patterns(); the reference the rewrite must agree with.
+_BACKTRACKING = [
+    r"(\d+[,\.]\d+)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)",
+    r"(\d+)\s*(?:kg|kilogramos?|gramos?|g|unidades?|uds?|piezas?|litros?|l|ml)",
+    r"(\d+[,\.]\d{2})\s*€",
+    r"(\d+[,\.]\d{2})\s*euros?",
+    r"(\d+[,\.]\d{2})\s*eur",
+    r"(\d+[,\.]\d{2})$",
+    r"(\d+)\s*€",
+    r"(\d+)\s*(?:uds?|unidades?)",
+    r"(\d+)\s*(?:pcs?|piezas?)",
+    r"(\d+)\s*(?:cajas?)",
+    r"(\d+)\s*(?:packs?)",
+    r"(\d+(?:[,\.]\d+)?)\s*kg",
+    r"(\d+(?:[,\.]\d+)?)\s*kilogramos?",
+    r"(\d+(?:[,\.]\d+)?)\s*g(?:\s|$)",
+    r"(\d+(?:[,\.]\d+)?)\s*gr(?:\s|$)",
+    r"(\d+(?:[,\.]\d+)?)\s*gramos?",
+    r"bandeja\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*g",
+    r"pack\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*g",
+    r"pieza\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*g",
+    r"aprox\.?\s*(\d+(?:[,\.]\d+)?)\s*kg",
+    r"aproximadamente\s+(\d+(?:[,\.]\d+)?)\s*kg",
+    r"peso\s+(?:aprox\.?\s+)?(\d+(?:[,\.]\d+)?)\s*(?:kg|g)",
+    r"(\d+(?:[,\.]\d+)?)\s*l(?:\s|$)",
+    r"(\d+(?:[,\.]\d+)?)\s*litros?",
+    r"(\d+(?:[,\.]\d+)?)\s*ml",
+    r"(\d+(?:[,\.]\d+)?)\s*mililitros?",
+    r"(\d+(?:[,\.]\d+)?)\s*cl",
+    r"(\d+(?:[,\.]\d+)?)\s*centilitros?",
+    r"botella\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*(?:ml|cl|l)",
+    r"envase\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*(?:ml|cl|l)",
+    r"brick\s+(?:de\s+)?(\d+(?:[,\.]\d+)?)\s*(?:ml|cl|l)",
+    r"\d+[,\.]\d{2}\s*€|€\s*\d+[,\.]\d{2}",
+]
+
+_QTY_SHAPE_BACKTRACKING = re.compile(
+    r"\d+[,\.]?\d*\s*(kg|g|gramos?|kilogramos?|unidades?|uds?|piezas?)", re.IGNORECASE
+)
+
+
+def _digit_run_patterns():
+    import facturas_spark.extraction.products as P
+
+    pats = [
+        *P._QTY_PATTERNS,
+        *P._PRICE_PATTERNS,
+        *(pat for pat, _, _ in P._UNIT_COUNT_PATTERNS),
+        *P._PESO_PATTERNS,
+        *P._VOL_PATTERNS,
+        P._PRICE_SHAPE,
+    ]
+    linear = [p for p in pats if "++" in p.pattern]
+    assert len(linear) == len(_BACKTRACKING)
+    return [(p, re.compile(old, p.flags)) for p, old in zip(linear, _BACKTRACKING)]
+
+def _digit_run_inputs():
+    rng = random.Random(20261017)
+    alphabet = "0123456789" * 3 + ",.,. \t€$" + "kgKGlLmcunidadespzsroUDSxbtj"
+    for _ in range(5_000):
+        yield "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 30)))
+    for d in gen_corpus(200, seed=42):
+        text = d.text or extract_main_text(d.html)
+        for line in text.split("\n"):
+            yield line
+            yield line.lower()
+
+
+def _match(pat, s):
+    m = pat.search(s)
+    return m and (m.span(), m.groups())
+
+
+def test_digit_run_patterns_match_backtracking_reference():
+    from facturas_spark.extraction.products import _QTY_SHAPE
+
+    pairs = list(_digit_run_patterns())
+    for s in _digit_run_inputs():
+        for new, old in pairs:
+            assert _match(new, s) == _match(old, s), (new.pattern, s)
+        assert (_QTY_SHAPE.search(s) is None) == (_QTY_SHAPE_BACKTRACKING.search(s) is None), s
+
+
+@pytest.mark.parametrize("prefix", ["Lote ", "lote ", "€ ", "bandeja de "])
+def test_extract_products_long_digit_run_is_linear(prefix):
+    t = time.perf_counter()
+    extract_products(prefix + "1" * 100_000)
+    assert time.perf_counter() - t < 1.0
