@@ -126,36 +126,6 @@ def checkpoint_with_ids(
     return out, ids
 
 
-# Memoized scan PLANS per (session, table file, file mtime). A
-# spark.read.parquet() call costs 60-90 ms of py4j round trips + footer
-# schema inference — paid for the SAME static gate table hundreds of
-# times across a suite/gate run (~350 reader calls ≈ 25 s of the sf0.1
-# suite before this memo). Only the immutable unresolved DataFrame
-# object is reused; no DATA is cached — every action still scans the
-# parquet files. The mtime in the key drops the entry the moment the
-# file (or a partition dir) is rewritten or appended to, so callers that
-# regenerate a table mid-session read fresh bytes, and the applicationId
-# keeps plans from a stopped session from leaking into a new one.
-_SCAN_MEMO: dict[tuple, tuple[float, DataFrame]] = {}
-
-
-def table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        mt = os.path.getmtime(path)
-    except OSError:
-        mt = -1.0
-    key = (spark.sparkContext.applicationId, path)
-    hit = _SCAN_MEMO.get(key)
-    if hit is not None and hit[0] == mt:
-        return hit[1]
-    df = spark.read.parquet(path)
-    _SCAN_MEMO[key] = (mt, df)
-    return df
-
-
 def session_cached(
     spark: SparkSession, sf_dir: str, kind: str, make
 ) -> DataFrame:

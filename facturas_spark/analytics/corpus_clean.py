@@ -54,10 +54,10 @@ from facturas_spark.analytics.dedup import (
     _lsh_candidate_pairs,
     _min_label_components,
     _shingle_table,
-    _t,
     _verified_pairs,
     _words,
 )
+from facturas_spark.analytics.scan import scan
 
 __all__ = [
     "MARKERS_EN",
@@ -767,7 +767,6 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once per (session, sf), the same trade the component
     labels and the plato base make; the funnel is then one aggregate."""
     from facturas_spark.analytics.cache import session_cached
-    from facturas_spark.analytics.dedup import _t_fan
 
     # fan the single-row-group scan (guide §2.5) so the chain's tokenize/
     # shingle stages run at session parallelism during the one-time build
@@ -776,7 +775,7 @@ def corpus_clean_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "corpus_clean_flags",
         lambda: per_doc_flags(
-            with_synth_pii(_t_fan(spark, sf_dir, "documents", "doc_id"))
+            with_synth_pii(scan(spark, sf_dir, "documents", fan_key="doc_id"))
         ),
     )
     # session_cached materializes via eager localCheckpoint — the chain's
@@ -797,7 +796,7 @@ def corpus_quota_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a planted 60%-hot corpus: wall parity at 32M rows, hot-task
     footprint bounded at salts*k candidates instead of the whole
     source)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     keep = quota_keep_ids(docs.select("doc_id", "source"), quota_k=8, salts=4)
     return (
         docs.select("doc_id", "source")

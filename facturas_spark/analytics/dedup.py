@@ -20,89 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from facturas_spark.analytics.scan import scan, table_big, table_bytes
+
 N_HASHES = 8  # MinHash signature length
 N_BANDS = 4   # LSH bands (2 rows per band)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
-
-
-_FAN_MEMO: dict[tuple, bool] = {}
-
-# Fan-out only pays when the single-task scan carries real work: below a
-# few MB the repartition exchange costs more than it parallelizes
-# (measured at sf0.1: ~+0.2 s per query for no gain). Env-overridable so
-# a cluster profile can raise/lower it; the splits<cores guard already
-# disables fan-out entirely once inputs arrive in many splits.
-FAN_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_MIN_BYTES", str(4 << 20)))
-
-
-def _table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of a table path — file, or recursive directory walk
-    (hive-partitioned datasets nest files under partition dirs, which a
-    flat listdir would count as ~4 KB inodes)."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if not os.path.isdir(path):
-            return os.path.getsize(path)
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                total += os.path.getsize(os.path.join(root, f))
-        return total
-    except OSError:
-        return 0
-
-
-def _table_big(sf_dir: str, name: str) -> bool:
-    """Size-only half of the fan gate — also the right predicate for
-    choosing per-row KERNELS (e.g. the unrolled cosine), where split
-    count is irrelevant: a big table deserves the fast kernel whether or
-    not its scan also needs a repartition."""
-    return _table_bytes(sf_dir, name) >= FAN_MIN_BYTES
-
-
-def _scan_effective_parallelism(
-    spark: SparkSession, sf_dir: str, name: str
-) -> int:
-    """How many tasks can actually produce rows from this table's scan.
-    Spark's planned split count is size/maxPartitionBytes, but parquet
-    delivers rows at ROW-GROUP granularity — a 600 MB single-row-group
-    file plans ~5 splits yet only ONE task gets rows. When the dataset
-    has fewer files than cores, cap the planned count by the total
-    row-group count (footers of a handful of files are cheap to read);
-    with >= cores files every file carries >= 1 row group, so the scan
-    is already at least cores-wide and the planned count stands."""
-    planned = _t(spark, sf_dir, name).rdd.getNumPartitions()
-    cores = spark.sparkContext.defaultParallelism
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, f)
-                for root, _dirs, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        if len(files) >= cores:
-            return planned
-        import pyarrow.parquet as pq
-
-        row_groups = sum(
-            pq.ParquetFile(f).metadata.num_row_groups for f in files
-        )
-        return min(planned, row_groups)
-    except Exception:
-        return planned
 
 
 # Broadcasting the scored vocabulary is the 100-TB shape ONLY while the
@@ -112,48 +33,12 @@ def _scan_effective_parallelism(
 # job instead of falling back). Gate on corpus bytes — at the default
 # 1 GiB of documents the vocab is at most a few million tokens (tens of
 # MB built); past the cap the scoring join reverts to the shuffle plan.
-VOCAB_BROADCAST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VOCAB_BROADCAST_MAX", str(1 << 30))
-)
+VOCAB_BROADCAST_MAX_BYTES = 1 << 30
 
 
 def _maybe_broadcast_vocab(sf_dir: str, df: DataFrame) -> DataFrame:
-    if _table_bytes(sf_dir, "documents") <= VOCAB_BROADCAST_MAX_BYTES:
+    if table_bytes(sf_dir, "documents") <= VOCAB_BROADCAST_MAX_BYTES:
         return F.broadcast(df)
-    return df
-
-
-def _fan_needed(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    """True when the table's scan should be fanned out: the table is big
-    enough that its per-row map work matters (>= FAN_MIN_BYTES) AND the
-    scan can effectively use fewer tasks than the session has slots
-    (row-group-aware — see _scan_effective_parallelism). Memoized per
-    (session, sf, table)."""
-    k = (spark.sparkContext.applicationId, sf_dir, name)
-    need = _FAN_MEMO.get(k)
-    if need is None:
-        cores = spark.sparkContext.defaultParallelism
-        need = _table_big(sf_dir, name) and (
-            _scan_effective_parallelism(spark, sf_dir, name) < cores
-        )
-        _FAN_MEMO[k] = need
-    return need
-
-
-def _t_fan(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Scan with unsplittable-input fan-out (guide §2.5 "input skew: one
-    huge unsplittable file ... repartition immediately after the read"):
-    the sf parquet tables are SINGLE-ROW-GROUP files, so a parquet scan
-    — and every per-row tokenize/hash/explode expression fused into it —
-    otherwise runs as one or two tasks regardless of core count (row
-    groups are the parquet split granularity). Hash-repartition on the
-    table key to the session's parallelism, gated by :func:`_fan_needed`.
-    At production scale inputs arrive in many splits, the guard is
-    false, and no extra exchange appears in the plan — the fan-out is
-    scale-adaptive, not a local[32] constant."""
-    df = _t(spark, sf_dir, name)
-    if _fan_needed(spark, sf_dir, name):
-        return df.repartition(spark.sparkContext.defaultParallelism, key)
     return df
 
 
@@ -167,7 +52,7 @@ def _words(col):
 def m3_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 demo: edit distance between consecutive part names (built-in
     levenshtein, both engines); keys restricted so output stays small."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
     a = part.select(F.col("p_partkey").alias("k1"), F.col("p_name").alias("n1"))
     b = part.select(F.col("p_partkey").alias("k2"), F.col("p_name").alias("n2"))
     return (
@@ -194,7 +79,7 @@ def m5_product_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm_desc_expr,
     )
 
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 200)
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 200)
     base = part.select(
         F.col("p_partkey").alias("k"),
         F.col("p_name").alias("n"),
@@ -241,7 +126,7 @@ def m4_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     levenshtein, same shape in the DuckDB twin."""
     from facturas_spark.matching.similarity import norm_desc_expr
 
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 150)
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 150)
     a = part.select(F.col("p_partkey").alias("k1"), F.col("p_name").alias("n1"))
     b = part.select(F.col("p_partkey").alias("k2"), F.col("p_name").alias("n2"))
     pairs = a.join(b, a.k1 + 1 == b.k2)
@@ -328,7 +213,7 @@ def m4_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m14_duplicate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M14 duplicate detection: same (custkey, orderdate) seen >1 time —
     the reference's CIF+numero_factura equality check shape."""
-    orders = _t_fan(spark, sf_dir, "orders", "o_orderkey")
+    orders = scan(spark, sf_dir, "orders", fan_key="o_orderkey")
     return (
         orders.groupBy("o_custkey", F.to_date("o_orderdate").alias("fecha"))
         .agg(F.count("*").alias("copies"), F.min("o_orderkey").alias("first_key"))
@@ -346,7 +231,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one shuffle on band key (explode -> groupBy), candidate
     verification would be a self-join within groups — counts reported here.
     """
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").filter(
         F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
     )
     words = _words(F.col("text"))
@@ -452,7 +337,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-pairs by design: this is the small-window exact oracle for the
     verify expression; the scale-path pair source is dedup_lsh_clusters
     (LSH band collisions -> same verify -> components)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     sh = _shingle_table(docs)
     a = sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("s1"))
     b = sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("s2"))
@@ -770,7 +655,7 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (dup ratio << 1), so the anti-join broadcasts. Reuses the
     session-cached cluster map from dedup_clusters instead of re-running
     the component job."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     clusters = dedup_clusters(spark, sf_dir)
     drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return (
@@ -928,7 +813,7 @@ def dedup_lsh_clusters(
     docstring), through this argument (round-7 advice)."""
 
     def make() -> DataFrame:
-        docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(
+        docs = scan(spark, sf_dir, "documents", fan_key="doc_id").filter(
             F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
         )
         sh = _shingle_table(docs).persist()
@@ -951,7 +836,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     in [8..f] (each nibble's MSB is a fair coin). simhash bit_k = majority
     vote over tokens; emitted as an integer. Identical in DuckDB.
     """
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
     words = _words(F.col("text"))
 
     def simhash_of(hashes):
@@ -990,7 +875,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine >= 0.2 — the semantic-dedup primitive over array<float>.
     JVM-side aggregate/zip_with; brute-force quadratic on the small window
     (the scale path is LSH-bucketing, see ann_lsh_buckets)."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 80)
+    emb = scan(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 80)
     a = emb.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("e1"))
     b = emb.select(F.col("vec_id").alias("id2"), F.col("embedding").alias("e2"))
     pairs = a.join(b, a.id1 < b.id2)
@@ -1000,16 +885,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos_sim") >= 0.2)
         .orderBy("id1", "id2")
     )
-
-
-def _sign_bucket(col: str, bits: int = 8):
-    """Axis-aligned hyperplane LSH bucket: bit i = sign of embedding dim i.
-    Deterministic and portable to the DuckDB oracle."""
-    bucket = None
-    for i in range(bits):
-        bit = F.when(F.element_at(col, i + 1) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
 
 
 EMB_FAST_DIM = 64  # the corpus embedding width (every synth sf emits 64-dim)
@@ -1234,7 +1109,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle spreads over 1024 keys here and tunes arbitrarily via
     (b, r) at scale. Bands past the vector's length are not emitted
     (short vectors participate only in the slices they populate)."""
-    emb = _t_fan(spark, sf_dir, "embeddings", "vec_id")
+    emb = scan(spark, sf_dir, "embeddings", fan_key="vec_id")
     return (
         _emb_candidates_with_cosine(emb.select("vec_id", "embedding"), "vec_id")
         .select("id1", "id2", F.round("_cos", 4).alias("cos_sim"))
@@ -1248,7 +1123,7 @@ def txt_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting via polynomial rolling hash of the normalized
     text: fold (acc*31 + ascii(char)) % 1000000007 over characters.
     Order-sensitive (unlike the md5 fingerprint in dedup_exact)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     norm = F.lower(F.regexp_replace(F.coalesce("text", F.lit("")), r"\s+", " "))
     chars = F.split(norm, "")
     fp = F.aggregate(
@@ -1277,7 +1152,7 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from facturas_spark.extraction import bpe
 
     def make() -> DataFrame:
-        docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+        docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
         return (
             docs.select(F.explode(bpe.pretokens_expr(F.col("text"))).alias("w"))
             .distinct()
@@ -1309,7 +1184,7 @@ def _bpe_token_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from facturas_spark.extraction import bpe
 
     def make() -> DataFrame:
-        docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+        docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
         pre = docs.select(
             "doc_id",
             F.posexplode(bpe.pretokens_expr(F.col("text"))).alias("pos", "w"),
@@ -1402,7 +1277,7 @@ def txt_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BPE-ish" estimator): counts come from `extraction/bpe.py`'s frozen
     learned-merge tokenizer via the vocabulary join — the per-lang
     totals a trainer's tokenizer would actually bill."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     counts = _bpe_counts_from_seq(
         docs, _bpe_token_seq(spark, sf_dir), extra_cols=["lang"]
     )
@@ -1431,7 +1306,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no fan-out here: the per-row work is 8 element_at sign tests — the
     # repartition exchange of the embedding arrays costs more than it
     # parallelizes (measured 0.29 -> 0.58 s at sf1.0 before reverting)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = scan(spark, sf_dir, "embeddings")
     bucket = None
     for i in range(8):
         bit = F.when(F.element_at("embedding", i + 1) > 0, F.lit(1 << i)).otherwise(
@@ -1454,7 +1329,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster scale the assignment is a write-time column so the probe is a
     partition-pruned read. Plan: centroids broadcast (8 rows), one
     window argmax on vec_id, TakeOrdered for the top-k."""
-    emb = _t_fan(spark, sf_dir, "embeddings", "vec_id")
+    emb = scan(spark, sf_dir, "embeddings", fan_key="vec_id")
     cents = (
         emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 8))
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
@@ -1468,7 +1343,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fast kernel whether or not its scan also needs a repartition; at
     # sf0.1 the unrolled form cost +1.2 s of fixed overhead for 2k
     # vectors)
-    cos = _cosine if _table_big(sf_dir, "embeddings") else _cosine_small
+    cos = _cosine if table_big(sf_dir, "embeddings") else _cosine_small
 
     assigned = (
         emb.crossJoin(F.broadcast(cents))
@@ -1511,7 +1386,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ask-my-invoices/index.ts:507-610) — multi-probe is the index-side
     version of that widening. Same plan shape as ann_ivf_topk: centroids
     broadcast, one window argmax, TakeOrdered top-k."""
-    emb = _t_fan(spark, sf_dir, "embeddings", "vec_id")
+    emb = scan(spark, sf_dir, "embeddings", fan_key="vec_id")
     cents = (
         emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 8))
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
@@ -1525,7 +1400,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fast kernel whether or not its scan also needs a repartition; at
     # sf0.1 the unrolled form cost +1.2 s of fixed overhead for 2k
     # vectors)
-    cos = _cosine if _table_big(sf_dir, "embeddings") else _cosine_small
+    cos = _cosine if table_big(sf_dir, "embeddings") else _cosine_small
 
     scored = (
         emb.crossJoin(F.broadcast(cents))
@@ -1565,7 +1440,7 @@ def txt_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-marker language ID (n-gram-heuristic family): counts of
     language-marker tokens -> argmax guess; confusion counts vs the lang
     column. All built-ins; one shuffle."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     words = _words(F.col("text"))
 
     def hits(markers: list[str]):
@@ -1628,7 +1503,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row per batch doc — decision in (kept, dropped_exact,
     dropped_neardup) and match_id = the smallest matching prior doc."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").filter(
         F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
     )
     batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -1724,7 +1599,7 @@ def txt_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything is columnar JVM-side arithmetic over the tokenized array —
     no UDF, no shuffle beyond the final presentation sort; at 100 TB this
     is a pure map stage fused into the scan."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     words = _words(F.col("text"))
     w = F.element_at(F.transform(F.array(words), lambda ws: ws), 1)  # let-bind
     n = F.size("w")
@@ -1772,7 +1647,7 @@ def txt_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     two partial-agg shuffles that AQE coalesces; no per-row quadratic
     scan (the in-row higher-order alternative is O(n_grams^2) per doc —
     fine at 100 words, pathological at 10^5)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     words = _words(F.col("text"))
     # docs with < 3 words have no 3-grams (and a degenerate 2-gram stat):
     # excluded up front, which also keeps every sequence() ascending
@@ -1835,7 +1710,7 @@ def corpus_packing(
     # a trainer's tokenizer would put it, not at a whitespace estimate;
     # counts read off the shared tokenized-corpus cache (size(w) ==
     # the vocabulary join's sum(wn); _bpe_counts_from_seq docstring)
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     budget = 512
     base = _bpe_counts_from_seq(docs, _bpe_token_seq(spark, sf_dir))
     if shards is None:
@@ -1875,7 +1750,7 @@ def corpus_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash shuffle on source; the row_number window is the standard
     bounded-quota primitive (vs sampleBy's probabilistic quotas, which
     can't promise an exact cap)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     k = 8
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
@@ -1899,7 +1774,7 @@ def txt_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     phone-shaped (ES 9-digit groups), and IPv4-shaped spans, plus the
     text length a redaction pass would preserve. Pure columnar regex —
     at 100 TB this fuses into the scan like every other map stage."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     email = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
     phone = r"\b[679]\d{2}[ .-]?\d{3}[ .-]?\d{3}\b"
     ipv4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -1959,7 +1834,7 @@ def embed_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from facturas_spark.extraction.embed import EMBED_DIM, _normalize
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
 
     @pandas_udf("n_grams long, nnz long, checksum long, sumsq long, max_dim long")
     def stats(text):
@@ -2018,7 +1893,7 @@ def extract_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from facturas_spark.extraction.embed import embed_udf, embed_vector
     from facturas_spark.pipeline import extract_pages
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     pages = docs.select(
         F.concat(F.lit("synthetic://"), F.col("doc_id").cast("string")).alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
@@ -2071,8 +1946,12 @@ def embed_neighbor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-squares as an interpreted per-element lambda; sumsq now comes
     from the same int64 vector in numpy (integer adds — order-exact), and
     the pair dot takes the unrolled codegen long kernel (:func:`_dot_long`,
-    bit-identical to the fold). Measured 1.6 s -> ~0.5 s noop at sf0.1."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
+    bit-identical to the fold). Measured 1.6 s -> ~0.5 s noop at sf0.1.
+
+    Building this plan runs an eager ``localCheckpoint`` of the embedded
+    vectors, so a Spark job runs when the function is called, not at the
+    first action; timing the build therefore includes that execution."""
+    docs = scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
 
     def vec_batches(batches):
         import pandas as pd
@@ -2138,7 +2017,7 @@ def corpus_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count -> top 50 by (count desc, token asc). One partial-agg shuffle on
     the token; the top-k is a TakeOrdered, not a global sort of the
     vocabulary."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     return (
         docs.select(F.explode(_words(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -2174,7 +2053,7 @@ def txt_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count columns. Result identical to the md5 form modulo 64-bit hash
     collisions (~1e-9 at the oracle scales)."""
     K = 20
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").filter(
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").filter(
         F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
     )
     words = _words(F.col("text"))
@@ -2254,9 +2133,13 @@ def txt_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (integer keys, no per-window concat_ws/md5 string build — guide §2.3
     narrower types + §4.2). Both sides use the same family, so the
     contamination decisions are unchanged (pinned by
-    test_decontamination_families_agree)."""
+    test_decontamination_families_agree).
+
+    Building this plan runs an eager ``localCheckpoint`` of the tokenized
+    corpus, so a Spark job runs when the function is called, not at the
+    first action; timing the build therefore includes that execution."""
     K = DECON_K
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     is_bench = F.col("doc_id") % 97 == 0
     words = _words(F.col("text"))
 
@@ -2467,7 +2350,7 @@ def _bigram_per_doc(
     BroadcastHashJoins without the tercile stage's eager checkpoint
     erasing the upstream plan."""
     LAMBDA = 0.7
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     words = docs.select("doc_id", _words(F.col("text")).alias("w")).filter(
         F.size("w") >= 2
     )
@@ -2577,8 +2460,12 @@ def txt_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus totals (T, V) are a 1-row broadcast; scoring joins
     exploded tokens to the vocab — at 100 TB the join side is the
     Zipf-headed vocab TOP slice broadcast with an OOV floor, making the
-    score a map-side pass (the exact-join form here is the oracle)."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    score a map-side pass (the exact-join form here is the oracle).
+
+    Building this plan runs an eager ``localCheckpoint`` of the tokenized
+    corpus, so a Spark job runs when the function is called, not at the
+    first action; timing the build therefore includes that execution."""
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     # the token stream feeds BOTH the vocab build and the scoring join —
     # materialize the scan+fan+TOKENIZE once (round 8; 1.69 -> 1.56 s at
     # the sf1 shape, 0.88 -> 0.71 at sf0.1) and explode per branch: the
@@ -2636,7 +2523,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids broadcast, one window argmax for assignment, the
     within-cell self-join keys on the cell id — no theta join across
     cells."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    emb = scan(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     cents = (
         emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= 8))
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
@@ -2691,7 +2578,7 @@ def txt_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus df) + one doc-keyed window for the top-3; the corpus doc
     count is a 1-row broadcast. df is Zipf-headed, so at 100 TB the df
     side broadcasts its head exactly like the unigram-LM vocab."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     toks = docs.select("doc_id", F.explode(_words(F.col("text"))).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     df_ = (
@@ -2743,7 +2630,7 @@ def url_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB this fuses into the page scan."""
     from facturas_spark.sources.urlfilter import url_quality_flags
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").select("doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").select("doc_id")
     d = F.col("doc_id")
     host = (
         F.when(d % 10 == 0, F.lit("ads.tracker.net"))
@@ -2792,7 +2679,7 @@ def dedup_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization itself is a pure map."""
     from facturas_spark.sources.urlfilter import normalize_url
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").select("doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").select("doc_id")
     d = F.col("doc_id")
     g = (d % 100).cast("string")
     core = F.concat(F.lit("site"), g, F.lit(".example.com/page"), g)
@@ -2832,7 +2719,7 @@ def host_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-then-join-back shape is the point: host scores are a tiny
     dim (one row per host) — broadcast back onto the corpus, so the
     corpus itself shuffles once on host for the rate and never again."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = scan(spark, sf_dir, "documents").select("doc_id", "n_chars")
     host = F.concat(F.lit("h"), (F.col("doc_id") % 20).cast("string"))
     # NULL n_chars counts as NOT-ok (0), matching the oracle's CASE; a
     # bare boolean cast would yield NULL, which avg() silently skips and
@@ -2887,7 +2774,7 @@ def txt_charset_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id").select("doc_id", "text")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id").select("doc_id", "text")
     d = F.col("doc_id")
     suffix = (
         F.when(d % 4 == 0, F.lit(" cafe\u0301"))   # NFD combining mark -> collapses
@@ -2982,7 +2869,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: a broadcast dim). Under-filled languages simply take what
     exists — the report row carries rank and keep so the funnel is
     auditable per doc."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = scan(spark, sf_dir, "documents").select("doc_id", "lang")
     items = list(MIXTURE_TARGETS.items())
     target = F.when(F.col("lang") == items[0][0], F.lit(items[0][1]))
     for lang, t in items[1:]:
@@ -3012,8 +2899,12 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two token-keyed partial-agg shuffles build the two
     count tables (one left-joins the other on the token), corpus totals
     are a 1-row broadcast, scoring is the same exploded-token join as
-    txt_unigram_lm_score; at 100 TB the Zipf-headed vocab broadcasts."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    txt_unigram_lm_score; at 100 TB the Zipf-headed vocab broadcasts.
+
+    Building this plan runs an eager ``localCheckpoint`` of the tokenized
+    corpus, so a Spark job runs when the function is called, not at the
+    first action; timing the build therefore includes that execution."""
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     # the token stream feeds BOTH the vocab aggregate (broadcast branch —
     # AQE broadcast query stages never reuse exchanges) and the scoring
     # join: materialize the scan+fan+tokenize once per invocation, same
@@ -3072,7 +2963,7 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure map (one md5 + conv per row); the split survives any
     repartitioning or incremental append because it depends only on the
     key — the property RNG-based splits lack at 100 TB."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = scan(spark, sf_dir, "documents").select("doc_id")
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
     ).cast("int")

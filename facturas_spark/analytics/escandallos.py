@@ -42,15 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
+from facturas_spark.analytics.scan import scan
 
 
 def _r(c, n: int = 2):
@@ -84,13 +76,13 @@ def _platos_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _platos_base_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from facturas_spark.analytics.queries import _rev_e4
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = scan(spark, sf_dir, "orders")
     # round 8: fanned scan keyed on the groupBy key (guide §2.5; one
     # exchange either way, but the 600k-row agg runs session-wide during
-    # the one-time session-cache build instead of in the lone scan task)
-    from facturas_spark.analytics.dedup import _t_fan
-
-    li = _t_fan(spark, sf_dir, "lineitem", "l_orderkey")
+    # the one-time session-cache build instead of in the lone scan task;
+    # on 4 cores at sf0.1 the build takes 0.75 s fanned vs 1.00 s not,
+    # median of 10 interleaved pairs, fan faster in 10 of 10)
+    li = scan(spark, sf_dir, "lineitem", fan_key="l_orderkey")
     # net line spend summed as exact 1e-4-euro BIGINTs (order-independent;
     # see queries._rev_e4); food_cost = net*(1+k)/10 rounded half-up at 2dp
     # via integer division on the exact rational
@@ -219,8 +211,8 @@ def esc_ingredientes_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_linenumber %% 4 == 0 carry origen_match='aprendido' (ia_aprendida),
     the rest are 'semantica'. success_rate uses floor(x+0.5) — JS
     Math.round half-up — identical in the oracle."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
+    part = scan(spark, sf_dir, "part")
     ing = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
         "l_orderkey",
         "l_linenumber",
@@ -259,7 +251,7 @@ def v_ventas_diarias(spark: SparkSession, sf_dir: str) -> DataFrame:
     completed sales only, per day: tickets, revenue, avg ticket, diners.
     Sale = order; estado completada = o_orderstatus 'F'; comensales
     synthesized deterministically as o_custkey %% 8 + 1."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     # integer-cents aggregation (q13 technique): prices are 2dp, so sum
     # exact cents as BIGINT and round the average half-up via integer
     # division — float SUM/AVG order varies with partitioning
@@ -301,9 +293,9 @@ def v_productos_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two strings per row (1.81 -> 1.58 s at the sf1 shape, 1.13 ->
     0.97 at sf0.1). The lineitem-side fan was also A/B'd and lost
     (ratio 1.35): the skinny partial agg beats a raw-row shuffle."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     agg = (
         li.join(o.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"))
         .groupBy("l_partkey")
@@ -336,12 +328,11 @@ def numier_upsert_ventas(spark: SparkSession, sf_dir: str) -> DataFrame:
     is union + latest-per-key (row_number desc) — one shuffle on the key;
     on the real lakehouse table this is the same plan Iceberg MERGE INTO
     produces (broadcast/SMJ on the key + per-key latest)."""
-    from facturas_spark.analytics.dedup import _t_fan
 
     # orders is a 2-row-group file: fan the scan so the projection +
     # map-side partial aggregate run at session parallelism (guide §2.5;
     # measured 2.2 -> 1.7 s at sf1.0)
-    o = _t_fan(spark, sf_dir, "orders", "o_orderkey")
+    o = scan(spark, sf_dir, "orders", fan_key="o_orderkey")
     sale = lambda batch_df, batch, price: batch_df.select(  # noqa: E731
         (F.col("o_custkey") % 100).alias("restaurante_id"),
         F.lit("numier").alias("sistema_origen"),
@@ -373,7 +364,7 @@ def numier_upsert_catalogo(spark: SparkSession, sf_dir: str) -> DataFrame:
     four-price struct is flattened to columns (the reference nests them
     in a JSON blob). Same MERGE shape as numier_upsert_ventas — one
     exchange on the key."""
-    part = _t(spark, sf_dir, "part")
+    part = scan(spark, sf_dir, "part")
     row = lambda batch_df, batch, price, active: batch_df.select(  # noqa: E731
         (F.col("p_partkey") % 40).alias("restaurante_id"),
         F.lit("numier").alias("sistema_origen"),
@@ -392,13 +383,22 @@ def numier_upsert_catalogo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey") % 8 == 0,
     )
     merged = existing.unionByName(incoming)
-    w = Window.partitionBy(
-        "restaurante_id", "sistema_origen", "producto_id_externo"
-    ).orderBy(F.col("_batch").desc())
+    # latest-per-key via max_by on the batch number, as in
+    # numier_upsert_ventas: a hash aggregate with map-side partial
+    # aggregation instead of a row_number window's shuffle+sort. Every
+    # batch re-delivers nombre and categoria_nombre unchanged (only the
+    # price and active flag move), so they ride along as grouping
+    # columns: a max_by over a string buffer would fall back to a
+    # sort-based aggregate.
     return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_batch")
+        merged.groupBy(
+            "restaurante_id", "sistema_origen", "producto_id_externo",
+            "nombre", "categoria_nombre",
+        )
+        .agg(
+            F.max_by("precio_base", "_batch").alias("precio_base"),
+            F.max_by("activo", "_batch").alias("activo"),
+        )
         .orderBy("producto_id_externo")
     )
 
@@ -418,7 +418,7 @@ def numier_dashboard_resumen(spark: SparkSession, sf_dir: str) -> DataFrame:
     anterior = 1994H2 (the corpus's densest halves, matching Q3)."""
     from facturas_spark.analytics.queries import _cents
 
-    o = _t(spark, sf_dir, "orders")
+    o = scan(spark, sf_dir, "orders")
     in_per = (F.col("o_orderdate") >= F.lit("1995-01-01")) & (
         F.col("o_orderdate") < F.lit("1995-07-01")
     )
@@ -475,7 +475,7 @@ def whatsapp_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unless k %% 5 == 0, restaurante_id = k %% 50)."""
     from facturas_spark.sources.whatsapp import route_whatsapp
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
+    ev = scan(spark, sf_dir, "events").filter(F.col("event_id") < 3000)
     d = (F.lit(600000000) + F.col("user_id") % 1000).cast("string")
     telefono = (
         F.when(F.col("event_id") % 4 == 0, F.concat(F.lit("34"), d))
@@ -512,7 +512,7 @@ def mailgun_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique_id, foreign domain, and zero attachments."""
     from facturas_spark.sources.whatsapp import MAILGUN_DOMAIN, route_mailgun
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
+    ev = scan(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
     rid = (F.col("user_id") % 50).cast("string")
     m = F.col("event_id") % 5
     recipient = (
@@ -550,7 +550,7 @@ def cotejo_decisiones(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle."""
     from facturas_spark.matching.cotejo import apply_cotejo_decisions
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 4000)
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 4000)
     enlaces = o.select(
         F.col("o_orderkey").alias("enlace_id"),
         F.lit("sugerido").alias("estado"),
@@ -589,7 +589,7 @@ def cola_procesamiento(spark: SparkSession, sf_dir: str) -> DataFrame:
     in estado='error'."""
     from facturas_spark.sources.queue import cola_apply_results, cola_next_batch
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000)
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000)
     queue = o.select(
         F.col("o_orderkey").alias("documento_id"),
         (F.col("o_custkey") % 50).alias("restaurante_id"),
@@ -623,7 +623,7 @@ def cotejo_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderkey %% 80, amount drift = (o_custkey %% 30 - 10)%%."""
     from facturas_spark.matching.cotejo import _score_m8, _score_m9
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     f_fecha = F.to_date("o_orderdate")
     a_fecha = F.when(
         F.col("o_orderkey") % 13 != 0,
@@ -663,7 +663,7 @@ def cotejo_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
     factura has no products (bonus withheld)."""
     from facturas_spark.matching.cotejo import categorize, consolidate
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 4000)
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 4000)
     p = F.col("o_orderkey") % 800
     metodo = F.element_at(
         F.array(
@@ -707,7 +707,7 @@ def cotejo_patron_efectividad(spark: SparkSession, sf_dir: str) -> DataFrame:
     confirmation iff o_orderkey %% 3 != 0. The reference folds events in
     one-by-one (read-modify-write); the declarative rebuild is a single
     groupBy — same end state, idempotent, scale-safe."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     metodo = F.element_at(
         F.array(
             F.lit("referencia_albaran"),
@@ -755,7 +755,7 @@ def iva_tipos_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same plan per 10^12 invoices (key cardinality ~3x orders)."""
     from facturas_spark.analytics.queries import _rev_e4
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 2000)
     tipo = F.element_at(
         F.array(F.lit(4), F.lit(10), F.lit(21)), (F.col("l_partkey") % 3 + 1).cast("int")
     )

@@ -15,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
+from facturas_spark.analytics.scan import scan
 
 
 def master_products(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,7 +25,7 @@ def master_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One shuffle on l_partkey: the window and the aggregation share the
     partitioning (Catalyst reuses the exchange)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 500)
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 500)
     w = Window.partitionBy("l_partkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )
@@ -95,9 +87,9 @@ def supplier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, 0.86 -> 0.66 at sf0.1). The scan fan was also A/B'd and lost
     (ratio 1.12): the partial agg collapses to ~|suppliers| rows before
     the only exchange."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
+    li = scan(spark, sf_dir, "lineitem")
+    sup = scan(spark, sf_dir, "supplier")
+    nat = scan(spark, sf_dir, "nation")
     from facturas_spark.analytics.queries import _rev_e4
 
     agg = (
@@ -128,7 +120,7 @@ def price_history_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """historial_precios analogue: the append-only purchase log with the
     per-purchase delta vs the product's previous price (LAG) — what the
     reference writes imperatively per document (index.ts:3360-3404)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 50)
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 50)
     w = Window.partitionBy("l_partkey").orderBy(
         "l_shipdate", "l_orderkey", "l_linenumber"
     )

@@ -23,6 +23,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from facturas_spark.analytics.scan import scan
+
 __all__ = ["detect_query_type", "is_sql_safe"]
 
 
@@ -86,16 +88,6 @@ def is_sql_safe(sql: str, restaurante_id: str) -> bool:
     return True
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
-
-
 # --- Q15 hybrid search cascade (busquedaHibridaRobusta, index.ts:687-922) ---
 
 # The reference ships TWO keyword extractors with different rules; each is
@@ -145,8 +137,8 @@ def busqueda_textual(
     keyword, as the reference ORs per-keyword queries), returning spend per
     matching product."""
     kws = extraer_palabras_clave(pregunta)
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     if not kws:
         return (
             li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -198,7 +190,7 @@ def q15_semantic_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the candidate cap makes the scored set tiny, so the
     cosine runs on a broadcast-joined 20-row frame — no full-corpus scan
     at serving time (the full-corpus path is ann_lsh_buckets)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = scan(spark, sf_dir, "embeddings")
     ranked = (
         emb.select(
             "vec_id",
@@ -244,8 +236,8 @@ def q15_datos_basicos(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns them as three keys of one JSON object). Each branch is a
     TakeOrderedAndProject (no full sort, no extra shuffle); the union is
     read-time only."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = scan(spark, sf_dir, "orders")
+    li = scan(spark, sf_dir, "lineitem")
     resumen = (
         orders.orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
         .limit(5)
@@ -287,7 +279,7 @@ def q14_ultima_factura(spark: SparkSession, sf_dir: str) -> DataFrame:
     the selected columns differ from the sistema variant), LIMIT 1;
     dias_diferencia = fecha_extraccion - fecha_factura. Key desc appended
     for a deterministic tie-break."""
-    o = _with_extraccion(_t(spark, sf_dir, "orders"))
+    o = _with_extraccion(scan(spark, sf_dir, "orders"))
     return (
         o.select(
             "o_orderkey",
@@ -311,7 +303,7 @@ def q14_ultima_factura(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_facturas_semana(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'facturas_esta_semana': count + spend since the Monday of the anchor
     week (date_trunc('week'))."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = scan(spark, sf_dir, "orders")
     anchor = orders.agg(
         F.date_trunc("week", F.max("o_orderdate")).alias("_semana")
     )
@@ -329,7 +321,7 @@ def q14_facturas_semana(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q14_gasto_mes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'gasto_este_mes': spend in the anchor month (date_trunc('month'))."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = scan(spark, sf_dir, "orders")
     anchor = orders.agg(
         F.date_trunc("month", F.max("o_orderdate")).alias("_mes")
     )
@@ -344,8 +336,8 @@ def q14_gasto_mes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_proveedores_activos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'proveedores_activos': per-supplier volume in the trailing 30 days of
     the anchor; supplier resolved through lineitem (broadcast dim join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
+    li = scan(spark, sf_dir, "lineitem")
+    sup = scan(spark, sf_dir, "supplier")
     anchor = li.agg(F.max(F.to_date("l_shipdate")).alias("_hoy"))
     return (
         li.crossJoin(F.broadcast(anchor))
@@ -367,7 +359,7 @@ def q14_proveedores_activos(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_resumen_anual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'resumen_anual': per-year count/sum/avg (integer-exact avg cents so
     both engines round identically)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = scan(spark, sf_dir, "orders")
     return (
         orders.groupBy(F.year("o_orderdate").alias("anio"))
         .agg(
@@ -395,8 +387,8 @@ def q14_top_proveedores(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the result is identical even if two suppliers shared a name, while
     the 6M-row partial agg hashes one long key instead of a string
     (A/B row-identical; 1.15 -> 1.01 s sf1 shape, 0.61 -> 0.56 sf0.1)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
+    li = scan(spark, sf_dir, "lineitem")
+    sup = scan(spark, sf_dir, "supplier")
     agg = li.groupBy("l_suppkey").agg(
         F.count("*").alias("_n"), F.sum(_rev4()).alias("_r")
     )
@@ -440,7 +432,7 @@ def q14_ultima_factura_sistema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'ultima_factura_sistema' template (CONSULTAS_BASICAS,
     ask-my-invoices/index.ts:354-371): latest by EXTRACTION date (not
     invoice date), with dias_diferencia and the tiempo_llegada label."""
-    o = _with_extraccion(_t(spark, sf_dir, "orders"))
+    o = _with_extraccion(scan(spark, sf_dir, "orders"))
     hoy = o.agg(F.max("fecha_extraccion").alias("_hoy"))
     return (
         o.crossJoin(F.broadcast(hoy))
@@ -463,7 +455,7 @@ def q14_facturas_recientes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'facturas_recientemente_recibidas' (index.ts:334-352): invoices whose
     extraction date falls in the trailing 7 days, newest-extracted first,
     top 10, with arrival labels."""
-    o = _with_extraccion(_t(spark, sf_dir, "orders"))
+    o = _with_extraccion(scan(spark, sf_dir, "orders"))
     hoy = o.agg(F.max("fecha_extraccion").alias("_hoy"))
     return (
         o.crossJoin(F.broadcast(hoy))
@@ -487,8 +479,8 @@ def q14_productos_mas_comprados(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'productos_mas_comprados' (index.ts:285-293): per product, total
     quantity + purchase count over the trailing 30 days, top 10 by
     quantity."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     anchor = li.agg(F.max(F.to_date("l_shipdate")).alias("_hoy"))
     return (
         li.crossJoin(F.broadcast(anchor))
@@ -507,8 +499,8 @@ def q14_productos_mas_comprados(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q14_productos_categoria(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'productos_por_categoria': spend per category (p_type) in the
     trailing 90 days of the anchor."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     anchor = li.agg(F.max(F.to_date("l_shipdate")).alias("_hoy"))
     return (
         li.crossJoin(F.broadcast(anchor))

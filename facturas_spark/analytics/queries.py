@@ -16,55 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _fan_post(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    df: DataFrame,
-    key: str,
-    force: bool = False,
-) -> DataFrame:
-    """Post-filter fan-out for the synthesized bank queries: their pushed
-    key filters leave a few thousand rows in the one task that owns the
-    pruned row group, and the per-row regex banks are the whole query
-    cost. Repartition those rows to session parallelism — but only when
-    the source table passes the same size/splits gate as dedup._t_fan
-    (a tiny table's scan is already cheap, and the exchange would cost
-    more than it parallelizes).
-
-    ``force`` overrides the byte gate for a site whose bank is heavy
-    enough to win at EVERY scale: these filters keep a constant ~5-6k
-    rows (the key bound is a literal), so both the exchange cost and the
-    bank cost are scale-independent — the right gate is the per-site
-    measured constant, not the source-table bytes. Round-8 A/B at sf0.1
-    (interleaved, min of 3): only f4_f6 clears it (0.63; its amount
-    battery is ~3x the other banks per row) — f1 1.54, f2 1.40, f8 1.74,
-    f11 1.63, f12 1.56, p9 1.30 all lose below the byte gate."""
-    from facturas_spark.analytics.dedup import _fan_needed
-
-    if force or _fan_needed(spark, sf_dir, table):
-        return df.repartition(spark.sparkContext.defaultParallelism, key)
-    return df
-
-
-def _t_fan(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Unsplittable-input fan-out — see dedup._t_fan (the sf parquet
-    tables are single-row-group files; without this the scan stage and
-    every per-row expression fused into it run as one task)."""
-    from facturas_spark.analytics.dedup import _t_fan as fan
-
-    return fan(spark, sf_dir, name, key)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # memoized scan plan (cache.table_scan): the reader call costs
-    # 60-90 ms of py4j + footer schema inference per invocation; only
-    # the immutable plan object is reused, every action still scans
-    # the parquet files (mtime-keyed, so a rewritten table re-reads)
-    from facturas_spark.analytics.cache import table_scan
-
-    return table_scan(spark, sf_dir, name)
+from facturas_spark.analytics.scan import scan
 
 
 def _cents(c) -> "F.Column":
@@ -91,7 +43,7 @@ def _rev_e4():
 def q01_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily sales view (ref migrations/2024_01_01_init_sales_dashboard.sql:77-87):
     GROUP BY day: count, sum, avg, ordered desc by day."""
-    ev = _t(spark, sf_dir, "events")
+    ev = scan(spark, sf_dir, "events")
     return (
         ev.groupBy(F.to_date("ts").alias("fecha"))
         .agg(
@@ -116,9 +68,11 @@ def q02_top_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8: fanned scan (guide §2.5) — single-row-group lineitem ran the
     broadcast join + countDistinct Expand + partial agg in ONE task;
-    measured 1.29 -> 0.81 s at sf0.1, neutral at well-split scales (gate)."""
-    li = _t_fan(spark, sf_dir, "lineitem", "l_partkey")
-    part = _t(spark, sf_dir, "part")
+    measured 1.29 -> 0.81 s at sf0.1, neutral at well-split scales (gate).
+    Re-measured on 4 cores at sf0.1 (10 interleaved pairs): 2.28 -> 1.58 s
+    median, fan faster in 10 of 10."""
+    li = scan(spark, sf_dir, "lineitem", fan_key="l_partkey")
+    part = scan(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_name")
@@ -143,7 +97,7 @@ def q03_dashboard_resumen(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ref get-dashboard-data/index.ts:71-124): two filtered aggregates over
     fixed adjacent windows + growth pct. Single scan via conditional agg —
     no self-join, no second pass."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = scan(spark, sf_dir, "orders")
     cur = (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1995-07-01")
     prev = (F.col("o_orderdate") >= "1994-07-01") & (F.col("o_orderdate") < "1995-01-01")
     cents = _cents(F.col("o_totalprice"))
@@ -181,7 +135,7 @@ def q03_dashboard_resumen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q04_payment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-bucketed pivot (ref get-dashboard-data/index.ts:147-162):
     event_type buckets -> per-bucket totals."""
-    ev = _t(spark, sf_dir, "events")
+    ev = scan(spark, sf_dir, "events")
     bucket = (
         F.when(F.col("event_type").isin("purchase", "refund"), "monetario")
         .when(F.col("event_type").isin("signup", "login"), "cuenta")
@@ -209,8 +163,8 @@ def q07_category_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps every exchange partial-agg-sized at any data scale."""
     # round 8: fan A/B'd and NOT applied — the serial partial agg here is
     # cheap (no Expand), so the 600k-row fan shuffle lost (ratio 1.23)
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     agg = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_type")
@@ -238,7 +192,7 @@ def q09_purchase_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 8: fan A/B'd and NOT applied — the partial agg collapses 600k
     # rows to 20k before the only exchange; fanning shuffled the raw rows
     # instead and lost (ratio 1.61)
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_partkey")
         .agg(
@@ -258,7 +212,7 @@ def q10_purchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG day-gaps per product (ref consulta_historial_completo.sql:37-52):
     avg/max gap between consecutive purchases. One shuffle (window + agg
     share the l_partkey partitioning — Catalyst reuses the exchange)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_partkey").orderBy("l_shipdate", "l_orderkey", "l_linenumber")
     gaps = li.select(
         "l_partkey",
@@ -290,8 +244,10 @@ def q12_multi_price_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 8: fanned scan keyed on the groupBy key (guide §2.5; q09
     rationale) — the countDistinct Expand doubles rows, so the serial
-    scan-stage agg was the whole query cost at single-row-group scales."""
-    li = _t_fan(spark, sf_dir, "lineitem", "l_partkey")
+    scan-stage agg was the whole query cost at single-row-group scales.
+    On 4 cores at sf0.1 (10 interleaved pairs): 1.28 -> 0.72 s median,
+    fan faster in 10 of 10."""
+    li = scan(spark, sf_dir, "lineitem", fan_key="l_partkey")
     return (
         li.groupBy("l_partkey")
         .agg(
@@ -317,7 +273,7 @@ def q13_rolling_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-30-day rolling price stats + pct change vs previous purchase
     (ref process-invoice/index.ts:3441-3505, declarative replacement of the
     imperative read-modify-write). rangeBetween over epoch-days."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 200)
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 200)
     days = F.datediff(F.col("l_shipdate"), F.lit("1992-01-01"))
     wr = (
         Window.partitionBy("l_partkey")
@@ -356,9 +312,9 @@ def q13_rolling_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q08_price_history_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Price-history log with date arithmetic (ref
     consulta_historial_completo.sql:5-18): 2 joins + day-age column."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 100)
-    part = _t(spark, sf_dir, "part")
-    orders = _t(spark, sf_dir, "orders")
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 100)
+    part = scan(spark, sf_dir, "part")
+    orders = scan(spark, sf_dir, "orders")
     # round 8 (guide §3.1): broadcast the SMALL compound side — the
     # planner was building the broadcast from the full 1.5M-row orders
     # scan (BuildRight) while the li⨝part side is ~6k rows after the
@@ -385,8 +341,8 @@ def q08_price_history_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_spend_per_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total/avg spend per product (ref consulta_historial_completo.sql:68-80)."""
     # round 8: fan A/B'd and NOT applied (no Expand here; ratio 1.18 — see q07)
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan(spark, sf_dir, "lineitem")
+    part = scan(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_name")
@@ -696,7 +652,7 @@ def ocr_layout_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting over documents (whitespace tokenizer), per-lang stats.
     Training-data-pipeline staple; pure built-ins (split/size)."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     toks = F.size(
         F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
     )
@@ -725,7 +681,7 @@ def txt_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality scoring (length / punctuation / stopword-ish
     ratios), bucketed. Generalizes the reference line filter T4
     (process-invoice/index.ts:1493-1510) to document level."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     n = F.length("text")
     letters = F.length(F.regexp_replace("text", r"[^A-Za-z]", ""))
     spaces = F.length(F.regexp_replace("text", r"[^ ]", ""))
@@ -748,7 +704,7 @@ def txt_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txt_amount_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field-extractor demo on the documents table: count amount-shaped and
     date-shaped tokens per lang (F4/F3 regex layer, SQL-expressible half)."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     amounts = F.size(F.regexp_extract_all("text", F.lit(r"(\d+[,\.]\d{2})"), 1))
     dates = F.size(
         F.regexp_extract_all("text", F.lit(r"(\d{1,2}/\d{1,2}/\d{2,4})"), 1)
@@ -772,7 +728,7 @@ def txt_content_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=4 letters and letter-ratio >= 0.3, not pure numbers/dates/labels —
     and report per-lang keep-rates. Pure built-ins; the trim is an
     explicit regexp so Spark and DuckDB agree on whitespace classes."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     lines = docs.select(
         "lang",
         F.explode(F.split(F.coalesce("text", F.lit("")), r"\.\s+")).alias("raw"),
@@ -819,7 +775,7 @@ def c1_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         _FACTURA_KEYWORDS,
     )
 
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     txt = F.coalesce("text", F.lit(""))
     low = F.lower(txt)
 
@@ -905,7 +861,7 @@ def txt_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2/14 are invalid and must be REJECTED by the validity gate), and two
     amounts on ids %% 5 != 0 (',' or '.' decimal by parity; the max must
     win). Amounts aggregate exactly as cents."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     did = F.col("doc_id")
     cif_part = F.when(
         did % 2 == 0,
@@ -994,10 +950,7 @@ def f11_fiscal_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cover every branch: total-only, base-only, base+cuota, base+total,
     incoherent triple (overwrite fires), coherent triple (untouched).
     Per-row double algebra — identical in both engines."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000)
     s = F.col("o_orderkey") % 6
     v = F.col("o_totalprice")
     tp = F.element_at(
@@ -1074,10 +1027,7 @@ def f8_date_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     always adds 2000 at :2893-2895; each extraction site binds its exact
     variant). Synthesized dd/mm/yy tokens from orders; the two parsed
     dates plus the agreement flag per row."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000)
     d = (F.col("o_orderkey") % 28 + 1).cast("int")
     m = (F.col("o_orderkey") % 12 + 1).cast("int")
     yy = (F.col("o_custkey") % 100).cast("int")
@@ -1104,10 +1054,7 @@ def f7_amount_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     currency/space stripping. Columnar rules are defined over
     single-comma/single-dot tokens (replace-all == replace-first there);
     kernel parity per token is pinned in pytest."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 6000)
     s = F.col("o_orderkey") % 8
     d3 = (F.col("o_orderkey") % 900 + 100).cast("string")
     d2 = F.lpad((F.col("o_custkey") % 100).cast("string"), 2, "0")
@@ -1178,10 +1125,7 @@ def p8_p15_products_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     em-dash, double spaces, each trailing-strip rule)."""
     from facturas_spark.extraction.products import _CATEGORIES
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 300), "p_partkey",
-    )
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 300)
     markers = [keys[0] for _, keys in _CATEGORIES] + ["zzz"]
     kw = F.element_at(
         F.array(*[F.lit(m) for m in markers]),
@@ -1233,10 +1177,7 @@ def p9_price_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each rule reads the previous rules' outputs). Scenarios synthesized
     from orders leave a different subset filled per row, with qty=0 rows
     exercising the qty>0 gates and tipo 0 exercising the falsy fallback."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     s = F.col("o_orderkey") % 8
     v = F.col("o_totalprice")
     qty0 = F.when(s.isin(0, 3, 5, 6), (F.col("o_custkey") % 5).cast("double"))
@@ -1372,10 +1313,7 @@ def f12_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded. Extraction-state flags synthesized bitwise from o_orderkey
     (all 64 flag combinations appear); amounts from o_totalprice with an
     incoherence offset on half the rows."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     bit = lambda n: F.expr(f"(o_orderkey div {2 ** n}) % 2 = 1")  # noqa: E731
     total = F.when(bit(3), F.col("o_totalprice")).otherwise(F.lit(0.0))
     base = F.when(bit(4), F.col("o_totalprice") / 1.21).otherwise(F.lit(0.0))
@@ -1414,10 +1352,7 @@ def p13_price_per_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-format row; every 7th row has price 0 (JS-falsy gate -> null)."""
     from facturas_spark.extraction.products import _KB
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400), "p_partkey",
-    )
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400)
     n_kb = len(_KB)
     s = F.col("p_partkey") % (n_kb + 3)
     kb_words = F.element_at(
@@ -1510,10 +1445,7 @@ def p14_multi_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(tipo, formato) price fan-out. Synthesized rows cross every type
     marker with every format fragment; every 5th row carries a formato
     override ('1 kg')."""
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400), "p_partkey",
-    )
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 400)
     k = F.col("p_partkey")
     marker = F.element_at(
         F.array(*[F.lit(m) for m in _P14_TYPE_MARKERS]), (k % 8 + 1).cast("int")
@@ -1689,10 +1621,7 @@ def p4_p7_line_parsers(spark: SparkSession, sf_dir: str) -> DataFrame:
     number rules). Lines synthesized as code x quantity x price fragment
     crosses (125 combos cycling over part keys); defaults qty=1.0,
     price/code/unit null."""
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 500), "p_partkey",
-    )
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 500)
     k = F.col("p_partkey")
     pick = lambda arr, idx: F.element_at(  # noqa: E731
         F.array(*[F.lit(x) for x in arr]), (idx + 1).cast("int")
@@ -1771,10 +1700,7 @@ def s2_mime_sniffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     and extensionless names."""
     from facturas_spark.sources.io import mime_from_url
 
-    part = _fan_post(
-        spark, sf_dir, "part",
-        _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 600), "p_partkey",
-    )
+    part = scan(spark, sf_dir, "part").filter(F.col("p_partkey") <= 600)
     k = F.col("p_partkey")
     name = F.element_at(
         F.array(
@@ -1822,10 +1748,7 @@ def f2_invoice_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate (factura/invoice/nº/num/fn) guards the whole bank. Texts
     synthesized per order key cover multi-candidate ties, the greedy
     uppercase-class capture of pattern 5, and gate misses."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     k = F.col("o_orderkey")
     d2 = F.lpad((k % 100).cast("string"), 2, "0")
     d3 = (k % 900 + 100).cast("string")
@@ -1902,10 +1825,7 @@ def f1_cif_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase prefixes match. Texts synthesized per key cover plain,
     dashed, labeled, NIF-dropped, lowercase, short-fallback and no-CIF
     shapes."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-    )
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
     k = F.col("o_orderkey")
     d8 = F.lpad(((k * 37) % 100000000).cast("string"), 8, "0")
     s = k % 7
@@ -1986,12 +1906,13 @@ def f4_f6_amount_banks(spark: SparkSession, sf_dir: str) -> DataFrame:
     each bank. Texts synthesized per key cover multi-candidate pick-max,
     value-before-label captures, the IVA-rate-token-as-cuota quirk, the
     out-of-range tipo filter, and all-defaults."""
-    o = _fan_post(
-        spark, sf_dir, "orders",
-        _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000), "o_orderkey",
-        # the three amount banks are the heaviest battery in the family —
-        # fan wins at every scale (0.63 at sf0.1; see _fan_post docstring)
-        force=True,
+    # the three amount banks are the heaviest battery in the family: the
+    # ~5k filtered rows leave the one task that owns the pruned row group
+    # at every scale (round-8 A/B at sf0.1, interleaved, min of 3: 0.63;
+    # the lighter bank sites measured 1.30-1.74 and read unfanned)
+    o = (
+        scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 5000)
+        .repartition(spark.sparkContext.defaultParallelism, "o_orderkey")
     )
     k = F.col("o_orderkey")
     a = lambda mult: F.concat(  # noqa: E731
@@ -2100,7 +2021,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content hash (hash-groupBy): md5 of normalized text;
     emit duplicate-group stats. The normalized md5 doubles as the document
     fingerprint operator."""
-    docs = _t_fan(spark, sf_dir, "documents", "doc_id")
+    docs = scan(spark, sf_dir, "documents", fan_key="doc_id")
     fp = F.md5(F.lower(F.regexp_replace(F.coalesce("text", F.lit("")), r"\s+", " ")))
     groups = (
         docs.select(fp.alias("fingerprint"))
@@ -2120,7 +2041,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     §2.6 Q15). Query vector = embedding of vec_id 0 (deterministic). The
     dot/norm runs JVM-side via aggregate/zip_with — no Python in the loop;
     TakeOrderedAndProject caps the shuffle at k rows per partition."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = scan(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     qlit = F.array(*[F.lit(float(x)) for x in q])
     dot = F.aggregate(
@@ -2156,7 +2077,7 @@ def stream_window_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-cents sum (see _cents) keeps the total order-independent, so
     the hash matches DuckDB regardless of partitioning. Oracle twin:
     time_bucket(INTERVAL 1 hour) — epoch-aligned like F.window."""
-    ev = _t(spark, sf_dir, "events")
+    ev = scan(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("ventana"), "event_type")
         .agg(
@@ -2184,7 +2105,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse that partitioning (verified: the only other Exchange in the plan
     is the final presentation orderBy's range partition); at 100 TB this is
     the canonical sort-within-user-partition pattern, no driver-side state."""
-    ev = _t(spark, sf_dir, "events")
+    ev = scan(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = 1800 * 1_000_000
     # events.ts is TIMESTAMP_NTZ; session TZ is pinned UTC (session.py:47),
@@ -2223,7 +2144,7 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     string, then integer-exact stats per event_type. get_json_object is
     JVM-side (Jackson); at scale this is a map stage fused into the scan —
     no UDF, no shuffle beyond the final per-type aggregation."""
-    ev = _t_fan(spark, sf_dir, "events", "event_id")
+    ev = scan(spark, sf_dir, "events", fan_key="event_id")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.select("event_type", k.alias("k"))

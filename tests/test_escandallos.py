@@ -91,6 +91,36 @@ def test_numier_upsert_last_write_wins(spark):
     assert rows[f"NUM-{k1}"]["total_bruto"] == pytest.approx(orders[k1], abs=0.011)
 
 
+def test_numier_upsert_catalogo_hash_aggregate_last_write_wins(spark):
+    """The catalog merge is one hash aggregate (no window, no sort before
+    the final ordering) and batch 2 wins for every fourth product."""
+    from facturas_spark.analytics.escandallos import numier_upsert_catalogo
+
+    out = numier_upsert_catalogo(spark, SF)
+    rows = {r["producto_id_externo"]: r for r in out.collect()}
+    # the AQE final plan (the string also carries the initial plan)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "HashAggregate" in plan, plan
+    assert "Window" not in plan and "SortAggregate" not in plan, plan
+    assert plan.count("Sort [") == 1, plan  # only the final orderBy
+    parts = {
+        r["p_partkey"]: r
+        for r in spark.read.parquet(f"{SF}/part.parquet").collect()
+    }
+    assert len(rows) == len(parts)
+    k4 = next(k for k in parts if k % 8 == 4)
+    k1 = next(k for k in parts if k % 4 != 0)
+    assert rows[f"PRD-{k4}"]["precio_base"] == pytest.approx(
+        round(parts[k4]["p_retailprice"] * 0.95, 2), abs=0.011
+    )
+    assert rows[f"PRD-{k4}"]["activo"] is False
+    assert rows[f"PRD-{k1}"]["precio_base"] == pytest.approx(
+        parts[k1]["p_retailprice"], abs=0.011
+    )
+    assert rows[f"PRD-{k1}"]["activo"] is True
+
+
 def test_ingredientes_dedup_first_wins(spark):
     # two lines with the same (name, qty) key: only the first survives,
     # and its match flags are the ones counted (main.js:305-314)

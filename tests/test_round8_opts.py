@@ -4,10 +4,10 @@
    higher-order-function fold it replaced (same left-to-right addition
    order from 0.0, same per-element double casts) — exact equality, no
    tolerance, including the short-vector fallback branch.
-2. The scan fan-out gate (`_fan_needed` / `_t_fan`) is adaptive in both
+2. The scan fan-out gate (`scan(..., fan_key=...)`) is adaptive in both
    directions: tiny tables are never repartitioned (the sf0.1 regression
    class), fan-worthy tables repartition to session parallelism, and the
-   decision is memoized per (session, sf, table).
+   decision is memoized per (session, table path).
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from facturas_spark.analytics import dedup as D
+from facturas_spark.analytics import scan as S
 
 SF = "/root/testdata/sf0.001"
 
@@ -80,30 +81,31 @@ def test_unrolled_dot_norm_match_fold_on_exact_width(spark):
 
 
 def test_fan_gate_never_fans_tiny_tables(spark):
-    D._FAN_MEMO.clear()
+    S._MEMO.clear()
     # sf0.001 documents is a few hundred KB — far under FAN_MIN_BYTES
-    assert not D._fan_needed(spark, SF, "documents")
-    df = D._t_fan(spark, SF, "documents", "doc_id")
-    plain = D._t(spark, SF, "documents")
-    # no repartition node: same partitioning as the raw scan
+    assert not S._fan_needed(spark, S._entry(spark, SF, "documents"))
+    df = S.scan(spark, SF, "documents", fan_key="doc_id")
+    plain = S.scan(spark, SF, "documents")
+    # no repartition node: the plain scan plan itself
+    assert df is plain
     assert df.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
 
 
 def test_fan_gate_fans_when_size_floor_cleared(spark, monkeypatch):
-    monkeypatch.setattr(D, "FAN_MIN_BYTES", 0)
-    D._FAN_MEMO.clear()
+    monkeypatch.setattr(S, "FAN_MIN_BYTES", 0)
+    S._MEMO.clear()
     try:
-        assert D._fan_needed(spark, SF, "documents")
-        df = D._t_fan(spark, SF, "documents", "doc_id")
+        assert S._fan_needed(spark, S._entry(spark, SF, "documents"))
+        df = S.scan(spark, SF, "documents", fan_key="doc_id")
         assert (
             df.rdd.getNumPartitions()
             == spark.sparkContext.defaultParallelism
         )
-        # memoized: second call answers from the cache (poke the memo)
-        key = (spark.sparkContext.applicationId, SF, "documents")
-        assert D._FAN_MEMO[key] is True
+        # memoized: the decision sits on the (session, path) entry
+        key = (spark.sparkContext.applicationId, f"{SF}/documents.parquet")
+        assert S._MEMO[key].fan is True
     finally:
-        D._FAN_MEMO.clear()
+        S._MEMO.clear()
 
 
 def test_table_bytes_recurses_partition_dirs(tmp_path):
@@ -113,13 +115,13 @@ def test_table_bytes_recurses_partition_dirs(tmp_path):
     root.mkdir(parents=True)
     (root / "part-0.parquet").write_bytes(b"x" * 10_000)
     (tmp_path / "t.parquet" / "part-1.parquet").write_bytes(b"y" * 5_000)
-    assert D._table_bytes(str(tmp_path), "t") == 15_000
+    assert S.table_bytes(str(tmp_path), "t") == 15_000
 
 
 def test_effective_parallelism_caps_by_row_groups(spark):
     """A single-row-group file can plan multiple splits but only one
     task gets rows — the gate must see effective parallelism 1."""
-    eff = D._scan_effective_parallelism(spark, SF, "documents")
+    eff = S._effective_parallelism(spark, S._entry(spark, SF, "documents"))
     assert eff == 1  # sf0.001 documents: one file, one row group
 
 
@@ -128,12 +130,12 @@ def test_fan_is_result_invariant(spark, monkeypatch):
     physical partitioning. Checked on the round-8 rewritten
     txt_substring_dup (window-over-fingerprint form)."""
     base = [tuple(r) for r in D.txt_substring_dup(spark, SF).collect()]
-    monkeypatch.setattr(D, "FAN_MIN_BYTES", 0)
-    D._FAN_MEMO.clear()
+    monkeypatch.setattr(S, "FAN_MIN_BYTES", 0)
+    S._MEMO.clear()
     try:
         fanned = [tuple(r) for r in D.txt_substring_dup(spark, SF).collect()]
     finally:
-        D._FAN_MEMO.clear()
+        S._MEMO.clear()
     assert base == fanned
 
 
@@ -185,38 +187,32 @@ def test_neighbor_graph_sumsq_matches_fold_rule(spark):
 
 
 def test_fan_post_force_is_result_invariant(spark):
-    """The force=True site (f4_f6_amount_banks) must produce identical
-    rows with the fan on and off — only the partitioning differs."""
+    """f4_f6_amount_banks repartitions its bank rows unconditionally —
+    also where the scan gate is closed (sf0.001) — and still returns the
+    bank rows."""
     from facturas_spark.analytics.queries import f4_f6_amount_banks
 
-    key = (spark.sparkContext.applicationId, SF, "orders")
-    D._FAN_MEMO[key] = False
-    try:
-        df = f4_f6_amount_banks(spark, SF)
-        # the fan is forced regardless of the (False-seeded) gate: the
-        # bank rows pass through a hash repartition before the battery
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "RepartitionByExpression" in plan, plan
-        assert len(df.collect()) > 0
-    finally:
-        D._FAN_MEMO.pop(key, None)
+    S._MEMO.clear()
+    df = f4_f6_amount_banks(spark, SF)
+    assert not S._fan_needed(spark, S._entry(spark, SF, "orders"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression" in plan, plan
+    assert len(df.collect()) > 0
 
 
 def test_table_scan_memo_and_mtime_invalidation(spark, tmp_path):
-    """cache.table_scan must return the SAME plan object for an unchanged
-    file (the 60-90 ms reader memo) and a FRESH read after the file is
-    rewritten — a stale listing would silently serve old data."""
+    """scan must return the SAME plan object for an unchanged file (the
+    60-90 ms reader memo) and a FRESH read after the file is rewritten —
+    a stale listing would silently serve old data."""
     import os
     import time as _time
-
-    from facturas_spark.analytics.cache import table_scan
 
     p = str(tmp_path)
     spark.createDataFrame([(1,)], "x long").coalesce(1).write.parquet(
         f"{p}/t.parquet"
     )
-    a = table_scan(spark, p, "t")
-    b = table_scan(spark, p, "t")
+    a = S.scan(spark, p, "t")
+    b = S.scan(spark, p, "t")
     assert a is b
     assert [r["x"] for r in a.collect()] == [1]
     _time.sleep(0.01)
@@ -224,6 +220,6 @@ def test_table_scan_memo_and_mtime_invalidation(spark, tmp_path):
         "overwrite"
     ).parquet(f"{p}/t.parquet")
     os.utime(f"{p}/t.parquet")  # directory mtime moves on rewrite; be explicit
-    c = table_scan(spark, p, "t")
+    c = S.scan(spark, p, "t")
     assert c is not a
     assert sorted(r["x"] for r in c.collect()) == [2, 3]

@@ -69,11 +69,11 @@ def main() -> None:
         _lsh_candidate_pairs,
         _min_label_components,
         _shingle_table,
-        _t,
         _verified_pairs,
     )
+    from facturas_spark.analytics.scan import scan
 
-    docs = _t(spark, sf_dir, "documents").filter(
+    docs = scan(spark, sf_dir, "documents").filter(
         F.trim(F.coalesce(F.col("text"), F.lit(""))) != ""
     )
     family = os.environ.get("SPARK_GRAFT_LSH_FAMILY", "md5")
@@ -99,7 +99,7 @@ def main() -> None:
         with_synth_pii,
     )
 
-    base = with_synth_pii(_t(spark, sf_dir, "documents"))
+    base = with_synth_pii(scan(spark, sf_dir, "documents"))
     f1 = tick(
         "clean.quality_frame",
         lambda: quality_frame(base).localCheckpoint(eager=True),
